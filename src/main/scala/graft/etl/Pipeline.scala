@@ -7,69 +7,83 @@ import org.apache.spark.sql.functions._
   * report — the Spark re-expression of `runPipeline`
   * (`/root/reference/cmd/etl/main.go:234-455`).
   *
-  * One declarative plan end-to-end: the only materializations are the
-  * sink write and the single report aggregation pass over the cached
-  * normalized frame. Worker pools / queues / mutexes from the reference
-  * are Spark's task scheduler; stage timings are measured around the two
-  * actions (documented approximation — pipelined stages aren't separately
-  * timable, SURVEY §2.3 A9).
+  * One declarative plan end-to-end. Every driver — the batch run, each
+  * stdin batch, each streaming micro-batch — executes it through
+  * [[runBatch]]: the report aggregation over the cached transformed
+  * frame, then the sink write of the kept records. Worker pools /
+  * queues / mutexes from the reference are Spark's task scheduler.
+  * Stage timings are the two spans of [[runBatch]]: the report pass
+  * (which also fills the cache, so it carries reading, parsing,
+  * normalizing and filtering) is `normalization_seconds`, the sink write
+  * alone is `writing_seconds`; parsing and filtering are fused into the
+  * same whole-stage-codegen stages and report 0 (documented
+  * approximation, SURVEY §2.3 A9). The HTTP sink is the only sink that
+  * fails records, and it writes the DLQ itself; the drivers only
+  * truncate the DLQ at the start of a fresh run ([[openSink]]).
   */
 object Pipeline {
 
-  case class Result(report: EtlReport, kept: DataFrame)
+  case class Result(report: EtlReport)
 
-  /** Run on an already-loaded raw-lines frame (library/test entry —
-    * mirror of `runPipeline(in io.Reader, …)`). */
-  def run(lines: DataFrame, cfg: EtlConfig): Either[String, Result] = {
-    for {
-      _ <- EtlConfig.validate(cfg)
-      sink <- Sinks.build(cfg)
-      normalized0 = Normalize(lines)
-      transformed0 <- TransformRegistry(cfg)(normalized0)
-    } yield {
+  /** The run's sink, with its DLQ started: a fresh run truncates the
+    * DLQ (the reference opens it with `os.Create`); a streaming run
+    * whose `checkpoint` already holds a prior run's state RESUMES — its
+    * sinks append from their first write and the DLQ keeps the prior
+    * batches' entries, because the checkpointed source will not re-read
+    * already processed input. */
+  private[graft] def openSink(cfg: EtlConfig, checkpoint: String = "")
+      : Either[String, Sinks.Sink] = {
+    val d = new java.io.File(checkpoint)
+    val resume = checkpoint.nonEmpty && d.isDirectory &&
+      Option(d.list()).exists(_.nonEmpty)
+    Sinks.build(cfg, resume).map { sink =>
+      if (!resume) Sinks.initDlq(cfg.dlqPath)
+      sink
+    }
+  }
+
+  /** The per-batch ETL core: cache the transformed frame, aggregate the
+    * report over it (A1–A5, [[EtlReport.fromDataFrame]]), write the kept
+    * records' output columns to `sink`, unpersist. Returns the batch's
+    * report carrying the sink outcome (A6–A8, retries, DLQ totals) and
+    * both spans as stage timings (see [[Pipeline]]). Reports of
+    * successive batches add up with [[EtlReport.merge]]. With
+    * `withReport = false` (a stream that only writes) the frame is
+    * neither cached nor aggregated and the report holds only the sink
+    * outcome. */
+  private[graft] def runBatch(transformed: DataFrame, sink: Sinks.Sink,
+      withReport: Boolean = true): EtlReport = {
+    val b = if (withReport) transformed.cache() else transformed
+    try {
       val t0 = System.nanoTime()
-      // fresh run: truncate the DLQ like the reference's os.Create —
-      // stale failure entries from a prior run must not accumulate
-      Sinks.initDlq(cfg.dlqPath)
-      val transformed = transformed0.cache()
-      val (kept, _, _) = Transforms.split(transformed)
-
-      // Sink write (A6–A8 + DLQ rows from the writer).
-      val writeStart = System.nanoTime()
-      val keptClean = kept.select("ts", "level", "message", "service",
-        "namespace", "pod", "node", "trace_id", "fields")
-      val wr = sink.write(keptClean)
-      val writeSecs = (System.nanoTime() - writeStart) / 1e9
-
-      // Report aggregation (A1–A5) in one pass over the cached frame.
-      val aggStart = System.nanoTime()
-      var report = EtlReport.fromDataFrame(transformed)
-      val aggSecs = (System.nanoTime() - aggStart) / 1e9
-
-      // a sink with dlqHandled wrote its DLQ distributed already —
-      // re-writing the (sampled) dlq seq would duplicate and undercount
-      if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
-        Sinks.writeDlq(cfg.dlqPath, wr.dlq)
-      report = report.copy(
+      val counts = if (withReport) EtlReport.fromDataFrame(b) else EtlReport()
+      val t1 = System.nanoTime()
+      val wr = sink.write(Transforms.split(b)._1.select("ts", "level",
+        "message", "service", "namespace", "pod", "node", "trace_id", "fields"))
+      val t2 = System.nanoTime()
+      counts.copy(
         writtenOk = wr.writtenOk,
         writeFailed = wr.writeFailed,
         retryStats = wr.retry,
         dlqWritten = wr.dlqWritten,
         dlqReasons = wr.dlqReasons,
-        // Pipelined stages aren't separately timable in a fused
-        // whole-stage-codegen plan (SURVEY §2.3 A9): attribute the
-        // aggregation pass to normalization and the sink action to
-        // writing.
         stageTimings = StageTimings(
-          parsingSeconds = 0,
-          normalizationSeconds = aggSecs,
-          filteringSeconds = 0,
-          writingSeconds = writeSecs))
-      report = report.withDuration((System.nanoTime() - t0) / 1e9)
-      transformed.unpersist()
-      Result(report, keptClean)
-    }
+          normalizationSeconds = (t1 - t0) / 1e9,
+          writingSeconds = (t2 - t1) / 1e9))
+    } finally if (withReport) b.unpersist()
   }
+
+  /** Run on an already-loaded raw-lines frame (library/test entry —
+    * mirror of `runPipeline(in io.Reader, …)`). */
+  def run(lines: DataFrame, cfg: EtlConfig): Either[String, Result] =
+    for {
+      _ <- EtlConfig.validate(cfg)
+      transformed <- TransformRegistry(cfg)(Normalize(lines))
+      sink <- openSink(cfg)
+    } yield {
+      val t0 = System.nanoTime()
+      Result(runBatch(transformed, sink).withDuration((System.nanoTime() - t0) / 1e9))
+    }
 
   /** Incremental byte-level line reader behind [[runStdin]] (r15 —
     * closes the r14 drain-loop gap): splits on `'\n'` at the BYTE
@@ -148,10 +162,10 @@ object Pipeline {
     * the buffered bytes yield up to `batchLines` (a partial trailing
     * line waits in its tail — it can never stall a drained batch),
     * processes that batch through parse → normalize → transforms →
-    * sink append → report merge, and loops — so output lands after
-    * every burst instead of after EOF. One Sink instance across
-    * batches gives the append lifecycle (the foreachBatch contract);
-    * reports ADD via [[graft.streaming.StreamingPipeline.merge]].
+    * [[runBatch]], and loops — so output lands after every burst
+    * instead of after EOF. One Sink instance across batches gives the
+    * append lifecycle (the foreachBatch contract); reports ADD via
+    * [[EtlReport.merge]].
     * Driver memory is bounded by `batchLines` raw lines per batch.
     * Returns the merged report at EOF; a never-closed pipe simply
     * keeps consuming (the reference behaves the same). Callers route
@@ -163,42 +177,21 @@ object Pipeline {
       : Either[String, EtlReport] = {
     for {
       _ <- EtlConfig.validate(cfg)
-      sink <- Sinks.build(cfg)
+      sink <- openSink(cfg)
     } yield {
       val t0 = System.nanoTime()
-      Sinks.initDlq(cfg.dlqPath)
       val batcher = new LineBatcher(in)
       import spark.implicits._
-      var acc = EtlReport()
-      var eof = false
-      while (!eof) {
-        batcher.nextBatch(batchLines) match {
-          case None => eof = true
-          case Some(batch) =>
+      Iterator.continually(batcher.nextBatch(batchLines))
+        .takeWhile(_.nonEmpty).flatten
+        .foldLeft(EtlReport()) { (acc, batch) =>
           val lines = batch.toDS().toDF("line")
             .filter(trim(col("line")) =!= "")
-          TransformRegistry(cfg)(Normalize(lines)) match {
-            case Right(transformed0) =>
-              val b = transformed0.cache()
-              try {
-                val part = EtlReport.fromDataFrame(b)
-                val (kept, _, _) = Transforms.split(b)
-                val clean = kept.select("ts", "level", "message", "service",
-                  "namespace", "pod", "node", "trace_id", "fields")
-                val wr = sink.write(clean)
-                if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
-                  Sinks.writeDlq(cfg.dlqPath, wr.dlq)
-                acc = graft.streaming.StreamingPipeline.merge(acc, part, wr)
-              } finally { b.unpersist(); () }
-            case Left(e) =>
-              // transform-registry config errors are caught by the
-              // pre-batch validate above; a Left here is unreachable,
-              // but fail loudly rather than silently dropping a batch
-              throw new IllegalStateException(s"transform chain: $e")
-          }
+          val transformed = TransformRegistry(cfg)(Normalize(lines))
+            .fold(e => throw new IllegalStateException(s"transform chain: $e"), identity)
+          acc.merge(runBatch(transformed, sink))
         }
-      }
-      acc.withDuration((System.nanoTime() - t0) / 1e9)
+        .withDuration((System.nanoTime() - t0) / 1e9)
     }
   }
 

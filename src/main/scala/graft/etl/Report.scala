@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/internal/report/report.go:14-185`). Here the same
   * numbers fall out of ONE aggregation pass over the normalized frame
   * (map-side partial aggregation, no shuffled data beyond a handful of
-  * counter rows), plus sink-side accumulators for write/retry/DLQ stats —
-  * the Spark-idiomatic equivalent of the Go worker counters.
+  * counter rows), plus the sink's write/retry/DLQ outcome — the
+  * Spark-idiomatic equivalent of the Go worker counters.
   */
 case class StageTimings(
     parsingSeconds: Double = 0,
@@ -58,6 +58,41 @@ case class EtlReport(
         val writes = writtenOk + writeFailed
         if (totalLines > 0 && writes > 0) writeFailed.toDouble / writes else 0
       })
+  }
+
+  /** Add another batch's report to this one (stdin batches, stream
+    * micro-batches): counters, breakdown maps and stage timings add;
+    * retry maxima take the max. Derived fields are left for
+    * [[withDuration]] at the end of the run. */
+  def merge(b: EtlReport): EtlReport = {
+    def addM(x: Map[String, Long], y: Map[String, Long]) =
+      (x.keySet ++ y.keySet).map(k =>
+        k -> (x.getOrElse(k, 0L) + y.getOrElse(k, 0L))).toMap
+    val (s, t) = (stageTimings, b.stageTimings)
+    copy(
+      totalLines = totalLines + b.totalLines,
+      jsonFailed = jsonFailed + b.jsonFailed,
+      jsonParsed = jsonParsed + b.jsonParsed,
+      normalizedOk = normalizedOk + b.normalizedOk,
+      normalizedFailed = normalizedFailed + b.normalizedFailed,
+      writtenOk = writtenOk + b.writtenOk,
+      writeFailed = writeFailed + b.writeFailed,
+      byLevel = addM(byLevel, b.byLevel),
+      byService = addM(byService, b.byService),
+      filteredLevel = filteredLevel + b.filteredLevel,
+      filteredService = filteredService + b.filteredService,
+      filteredOther = filteredOther + b.filteredOther,
+      dlqWritten = dlqWritten + b.dlqWritten,
+      dlqReasons = addM(dlqReasons, b.dlqReasons),
+      stageTimings = StageTimings(
+        s.parsingSeconds + t.parsingSeconds,
+        s.normalizationSeconds + t.normalizationSeconds,
+        s.filteringSeconds + t.filteringSeconds,
+        s.writingSeconds + t.writingSeconds),
+      retryStats = RetryStats(
+        retryStats.totalRetries + b.retryStats.totalRetries,
+        retryStats.writesWithRetries + b.retryStats.writesWithRetries,
+        math.max(retryStats.maxRetriesPerWrite, b.retryStats.maxRetriesPerWrite)))
   }
 
   /** Pretty JSON with the reference's exact key names

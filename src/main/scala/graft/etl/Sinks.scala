@@ -120,25 +120,20 @@ object Sinks {
     } catch { case _: Exception => false }
 
   /** Per-sink write outcome; feeds A6–A8 + DLQ (report wiring in
-    * [[Pipeline]]).
+    * [[Pipeline.runBatch]]).
     *
-    * `dlq` carries record-level failures as (record JSON, reason). For
-    * driver-side sinks it is complete and the pipeline writes it to the
-    * DLQ file; a sink that persists its own DLQ distributed (HttpSink)
-    * sets `dlqHandled = Some((written, reasonCounts))` and `dlq` is only
-    * a CAPPED SAMPLE — callers must use [[WriteResult.dlqWritten]] /
-    * [[WriteResult.dlqReasons]] instead of sizing `dlq`, and must NOT
-    * re-write `dlq` to the DLQ path when `dlqHandled` is set. */
+    * Only [[HttpSink]] fails records, and it writes its own DLQ
+    * (distributed, see there): `dlqWritten` / `dlqReasons` are the
+    * exact totals of that write (zero when no DLQ path is configured),
+    * `dlqSample` a [[HttpSink.DlqSampleCap]]-bounded sample of the
+    * failures as (record JSON, reason) for logs. */
   case class WriteResult(
       writtenOk: Long,
-      writeFailed: Long,
-      retry: RetryStats,
-      dlq: Seq[(String, String)], // (record JSON, reason)
-      dlqHandled: Option[(Long, Map[String, Long])] = None) {
-    def dlqWritten: Long = dlqHandled.map(_._1).getOrElse(dlq.size.toLong)
-    def dlqReasons: Map[String, Long] = dlqHandled.map(_._2).getOrElse(
-      dlq.groupBy(_._2).view.mapValues(_.size.toLong).toMap)
-  }
+      writeFailed: Long = 0,
+      retry: RetryStats = RetryStats(),
+      dlqWritten: Long = 0,
+      dlqReasons: Map[String, Long] = Map.empty,
+      dlqSample: Seq[(String, String)] = Nil)
 
   /** Write lifecycle: a Sink instance has PROCESS semantics — the first
     * `write` starts the output fresh (the reference CLI's `os.Create`
@@ -153,8 +148,7 @@ object Sinks {
     * restarts is AT-LEAST-ONCE: the streaming layer skips micro-batches
     * its last-batch marker says were already written, which shrinks —
     * but cannot close — the replay window of a crash between the sink
-    * write and the marker write (see
-    * [[graft.streaming.StreamingPipeline.writeStream]]). */
+    * write and the marker write (the streaming drivers' replay guard). */
   trait Sink {
     /** Write all rows of a normalized frame; never throws per-record. */
     def write(df: DataFrame): WriteResult
@@ -196,7 +190,7 @@ object Sinks {
       var n = 0L
       val it = df.toLocalIterator()
       while (it.hasNext) { out.println(renderRecord(it.next())); n += 1 }
-      WriteResult(n, 0, RetryStats(), Nil)
+      WriteResult(n)
     }
   }
 
@@ -217,7 +211,7 @@ object Sinks {
       lines.write.mode("overwrite").text(tmp)
       val n = mergeParts(df.sparkSession, tmp, path, keepExisting)
       keepExisting = true
-      WriteResult(n, 0, RetryStats(), Nil)
+      WriteResult(n)
     }
   }
 
@@ -341,7 +335,7 @@ object Sinks {
           out.write(data); size += bytes; n += 1
         }
       } finally out.close()
-      WriteResult(n, 0, RetryStats(), Nil)
+      WriteResult(n)
     }
   }
 
@@ -363,8 +357,11 @@ object Sinks {
     * degraded. Instead, when `dlqPath` is set the failure frame is
     * rendered and written DISTRIBUTED (part files merged into the single
     * JSONL target, same machinery as FileSink); the report gets exact
-    * counts + per-reason totals from a tiny aggregation, and `dlq`
-    * carries only a `DlqSampleCap`-bounded sample for logs/summary. */
+    * counts + per-reason totals from a tiny aggregation, and
+    * `dlqSample` carries only a `DlqSampleCap`-bounded sample for logs.
+    * This is the pipeline's only DLQ writer: no other sink fails a
+    * record, and the drivers only truncate the file at the start of a
+    * fresh run ([[initDlq]]). */
   final class HttpSink(url: String, policy: RetryPolicy,
       timeoutMs: Int = 30000, dlqPath: String = "") extends Sink {
     def write(df: DataFrame): WriteResult = {
@@ -417,46 +414,46 @@ object Sinks {
         coalesce(max(col("retries")), lit(0L)).as("max_retries")).head()
       val okCount = agg.getAs[Long]("ok")
       val failed = agg.getAs[Long]("total") - okCount
-      var sample: Seq[(String, String)] = Nil
-      var handled: Option[(Long, Map[String, Long])] = None
-      if (failed > 0) {
-        import org.apache.spark.sql.functions.concat
-        val failFrame = status.filter(col("ok") === 0)
-        // the ACTUAL last error (e.g. "unexpected status 500") — the
-        // reference keys DLQ reasons on err.Error() (main.go:319-325),
-        // so an operator can tell 4xx from 5xx from timeouts
-        val reasonCol = coalesce(col("err"),
-          concat(lit("write failed after "),
-            col("retries").cast("string"), lit(" retries")))
-        // reason cardinality = distinct error messages (HTTP failures
-        // are low-cardinality by nature) — a tiny aggregate
-        val reasons = failFrame.groupBy(reasonCol.as("reason")).count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-        sample = failFrame.select(col("body"), reasonCol.as("reason"))
-          .limit(HttpSink.DlqSampleCap).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
-        if (dlqPath.nonEmpty) {
-          // distributed DLQ write: render lines on executors, merge the
-          // part files into the single JSONL target (append semantics —
-          // prior DLQ content from earlier batches is carried over)
-          val lines = failFrame.select(concat(
-            lit("{\"record\":"), col("body"),
-            lit(",\"reason\":\""), reasonCol, lit("\"}")).as("value"))
-          val tmp = dlqPath + ".spark-tmp"
-          lines.write.mode("overwrite").text(tmp)
-          mergeParts(df.sparkSession, tmp, dlqPath, keepExisting = true)
+      val retry = RetryStats(agg.getAs[Long]("retries"),
+        agg.getAs[Long]("retried"), agg.getAs[Long]("max_retries"))
+      try {
+        if (failed == 0) WriteResult(okCount, 0, retry)
+        else {
+          import org.apache.spark.sql.functions.concat
+          val failFrame = status.filter(col("ok") === 0)
+          // the ACTUAL last error (e.g. "unexpected status 500") — the
+          // reference keys DLQ reasons on err.Error() (main.go:319-325),
+          // so an operator can tell 4xx from 5xx from timeouts
+          val reasonCol = coalesce(col("err"),
+            concat(lit("write failed after "),
+              col("retries").cast("string"), lit(" retries")))
+          val sample = failFrame.select(col("body"), reasonCol.as("reason"))
+            .limit(HttpSink.DlqSampleCap).collect()
+            .map(r => (r.getString(0), r.getString(1))).toSeq
+          // no DLQ configured → failures are LOST, not "written": the
+          // reference only counts dlq_written with a live dlqWriter
+          // (main.go:319-325); the capped sample still feeds logs
+          if (dlqPath.isEmpty) WriteResult(okCount, failed, retry, dlqSample = sample)
+          else {
+            // reason cardinality = distinct error messages (HTTP failures
+            // are low-cardinality by nature) — a tiny aggregate
+            val reasons = failFrame.groupBy(reasonCol.as("reason")).count()
+              .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+            // K6, the DLQ — JSONL of `{record, reason}`
+            // (`cmd/etl/main.go:475-478`, `319-325`), written
+            // distributed: render lines on executors, merge the part
+            // files into the single JSONL target (append semantics —
+            // prior DLQ content from earlier batches is carried over)
+            val lines = failFrame.select(concat(
+              lit("{\"record\":"), col("body"),
+              lit(",\"reason\":\""), reasonCol, lit("\"}")).as("value"))
+            val tmp = dlqPath + ".spark-tmp"
+            lines.write.mode("overwrite").text(tmp)
+            mergeParts(df.sparkSession, tmp, dlqPath, keepExisting = true)
+            WriteResult(okCount, failed, retry, failed, reasons, sample)
+          }
         }
-        // no DLQ configured → failures are LOST, not "written": the
-        // reference only counts dlq_written with a live dlqWriter
-        // (main.go:319-325); the capped sample still feeds logs
-        handled = Some(if (dlqPath.nonEmpty) (failed, reasons)
-          else (0L, Map.empty[String, Long]))
-      }
-      status.unpersist(blocking = false)
-      WriteResult(okCount, failed,
-        RetryStats(agg.getAs[Long]("retries"), agg.getAs[Long]("retried"),
-          agg.getAs[Long]("max_retries")),
-        sample, handled)
+      } finally status.unpersist(blocking = false)
     }
   }
 
@@ -480,7 +477,7 @@ object Sinks {
       df.observe(obs, count(lit(1)).as("n")).write.mode(mode).parquet(path)
       firstWrite = false
       val n = obs.get("n").asInstanceOf[Long]
-      WriteResult(n, 0, RetryStats(), Nil)
+      WriteResult(n)
     }
   }
 
@@ -509,7 +506,7 @@ object Sinks {
         .option("kafka.bootstrap.servers", bootstrapServers)
         .option("topic", topic)
         .save()
-      WriteResult(obs.get("n").asInstanceOf[Long], 0, RetryStats(), Nil)
+      WriteResult(obs.get("n").asInstanceOf[Long])
     }
   }
 
@@ -526,22 +523,6 @@ object Sinks {
     java.nio.file.Files.newBufferedWriter(p,
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.TRUNCATE_EXISTING).close()
-  }
-
-  /** K6: DLQ — JSONL of `{record, reason}` (`cmd/etl/main.go:475-478`,
-    * `319-325`). `record` is the already-rendered record object. */
-  def writeDlq(path: String, entries: Seq[(String, String)]): Unit = {
-    if (path.isEmpty || entries.isEmpty) return
-    val p = java.nio.file.Paths.get(path)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    val out = java.nio.file.Files.newBufferedWriter(p,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    try entries.foreach { case (record, reason) =>
-      val esc = reason.replace("\\", "\\\\").replace("\"", "\\\"")
-      out.write(s"""{"record":$record,"reason":"$esc"}""")
-      out.write("\n")
-    } finally out.close()
   }
 
   /** K7: builder — dispatch on output_type (`builder.go:15-55`), with the

@@ -56,33 +56,16 @@ object StreamingPipeline {
     TransformRegistry(cfg)(Normalize(lines))
       .fold(err => throw new IllegalArgumentException(err), identity)
 
-  /** Per-micro-batch sink writer: kept rows go to the configured sink,
-    * failures to the DLQ, counters to the listener bus — the exact
-    * once-per-batch semantics the reference's BatchedSink provided
-    * (`internal/sink/batched.go`), with Spark supplying the
-    * time+size batching. ONE sink instance serves the whole query:
-    * Sink's write lifecycle (first call truncates, later calls append —
-    * see [[graft.etl.Sinks.Sink]]) makes batch N+1 extend batch N's
-    * output instead of overwriting it. */
-  /** True when `checkpoint` holds a prior run's state — the restart
-    * case where sinks must append from their first write instead of
-    * truncating (the checkpointed source will NOT re-read already
-    * processed input, so truncation would lose those batches). */
-  private def isResume(checkpoint: String): Boolean = {
-    val d = new java.io.File(checkpoint)
-    d.isDirectory && d.list() != null && d.list().nonEmpty
-  }
-
   /** foreachBatch replay guard: Spark's contract is at-least-once — a
     * crash after the sink write but before the checkpoint commit
     * re-runs that micro-batch on restart, and with resume-append sinks
     * its records would be appended twice. A marker file beside the
     * checkpoint records the last successfully written batchId; replayed
-    * batches (batchId <= marker) are skipped. The marker is written
-    * AFTER the sink write, so the remaining duplicate window is a crash
-    * between those two writes — disclosed at-least-once, not
-    * exactly-once (exactly-once to an appended file would need a
-    * transactional commit per batch). */
+    * batches (batchId <= marker) are skipped, report included. The
+    * marker is written AFTER the sink write, so the remaining duplicate
+    * window is a crash between those two writes — disclosed
+    * at-least-once, not exactly-once (exactly-once to an appended file
+    * would need a transactional commit per batch). */
   private def lastWrittenBatch(checkpoint: String): Long =
     try java.nio.file.Files.readString(
       java.nio.file.Paths.get(checkpoint, "graft-last-batch")).trim.toLong
@@ -94,30 +77,40 @@ object StreamingPipeline {
     java.nio.file.Files.writeString(p, batchId.toString)
   }
 
+  /** The foreachBatch body both stream drivers share: each new
+    * micro-batch runs the batch pipeline's per-batch core
+    * ([[graft.etl.Pipeline.runBatch]] — kept rows to the sink, the
+    * DLQ written by the sink itself) and hands its report to
+    * `onReport` (no `onReport`: no report pass); replayed batches are
+    * skipped (see [[lastWrittenBatch]]).
+    * ONE sink instance serves the whole query: Sink's write lifecycle
+    * (first call truncates, later calls append — see
+    * [[graft.etl.Sinks.Sink]]) makes batch N+1 extend batch N's output
+    * instead of overwriting it — the exact once-per-batch semantics the
+    * reference's BatchedSink provided (`internal/sink/batched.go`), with
+    * Spark supplying the time+size batching. */
+  private def batchBody(sink: Sinks.Sink, checkpoint: String,
+      onReport: Option[EtlReport => Unit]): (DataFrame, Long) => Unit =
+    (batch, batchId) =>
+      if (batchId > lastWrittenBatch(checkpoint)) {
+        val report = Pipeline.runBatch(batch, sink, onReport.nonEmpty)
+        onReport.foreach(_(report))
+        markBatchWritten(checkpoint, batchId)
+      }
+
+  /** Run the streaming pipeline continuously: `transformed` written to
+    * the configured sink every `triggerMs`, no report. */
   def writeStream(transformed: DataFrame, cfg: EtlConfig,
       checkpoint: String,
-      triggerMs: Long = 1000): Either[String, StreamingQuery] = {
-    if (!isResume(checkpoint)) Sinks.initDlq(cfg.dlqPath)
-    Sinks.build(cfg, resume = isResume(checkpoint)).map { sink =>
+      triggerMs: Long = 1000): Either[String, StreamingQuery] =
+    Pipeline.openSink(cfg, checkpoint).map { sink =>
       transformed.writeStream
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.ProcessingTime(triggerMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId > lastWrittenBatch(checkpoint)) {
-            val (kept, _, _) = Transforms.split(batch)
-            val clean = kept.select("ts", "level", "message", "service",
-              "namespace", "pod", "node", "trace_id", "fields")
-            val res = sink.write(clean)
-            if (cfg.dlqPath.nonEmpty && res.dlqHandled.isEmpty)
-              Sinks.writeDlq(cfg.dlqPath, res.dlq)
-            markBatchWritten(checkpoint, batchId)
-          }
-          ()
-        }
+        .foreachBatch(batchBody(sink, checkpoint, onReport = None))
         .start()
     }
-  }
 
   /** Result of a drain-the-input streaming run: the assembled report
     * plus the summed `observe()` counters (one entry per A1–A5 metric,
@@ -126,18 +119,17 @@ object StreamingPipeline {
 
   /** Run the full streaming pipeline over `inDir` until the input is
     * drained (Trigger.AvailableNow) and assemble the SAME [[EtlReport]]
-    * the batch [[graft.etl.Pipeline]] produces: per-micro-batch reports
-    * come from the identical `EtlReport.fromDataFrame` aggregation and
-    * ADD across batches; sink writes go through one Sink instance
-    * (append lifecycle) exactly like the batch run's single write.
-    * This is the reference's integration-test contract
+    * the batch [[graft.etl.Pipeline]] produces: every micro-batch runs
+    * the batch run's per-batch core, and the per-batch reports ADD
+    * ([[graft.etl.EtlReport.merge]]); sink writes go through one Sink
+    * instance (append lifecycle) exactly like the batch run's single
+    * write. This is the reference's integration-test contract
     * (`cmd/etl/integration_test.go:69-93`) stated as batch↔streaming
     * equivalence — asserted in StreamingSpec. */
   def runOnce(spark: SparkSession, inDir: String, cfg: EtlConfig,
       checkpoint: String,
       maxFilesPerTrigger: Int = 1): Either[String, StreamRunResult] = {
-    if (!isResume(checkpoint)) Sinks.initDlq(cfg.dlqPath)
-    Sinks.build(cfg, resume = isResume(checkpoint)).map { sink =>
+    Pipeline.openSink(cfg, checkpoint).map { sink =>
       @volatile var acc = EtlReport()
       // observed metrics come from a listener, NOT q.recentProgress:
       // recentProgress is a ring buffer capped at
@@ -168,70 +160,20 @@ object StreamingPipeline {
           .outputMode("append")
           .option("checkpointLocation", checkpoint)
           .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val b = batch.cache()
-            try {
-              val part = EtlReport.fromDataFrame(b)
-              val (kept, _, _) = Transforms.split(b)
-              val clean = kept.select("ts", "level", "message", "service",
-                "namespace", "pod", "node", "trace_id", "fields")
-              val wr = sink.write(clean)
-              if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
-                Sinks.writeDlq(cfg.dlqPath, wr.dlq)
-              acc = merge(acc, part, wr)
-            } finally b.unpersist()
-            ()
-          }
+          .foreachBatch(batchBody(sink, checkpoint,
+            Some((r: EtlReport) => acc = acc.merge(r))))
           .start()
         q.awaitTermination()
-        // listener events are delivered asynchronously (the internal
-        // bus-drain API is private) — wait for the accumulated counters
-        // to go quiescent before reading them
+        // every progress event was posted before the query terminated;
+        // listener delivery is asynchronous, so drain the bus first
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
         import scala.jdk.CollectionConverters._
         val qid = q.id.toString
-        def snapshot(): Map[String, Long] = obsAcc.asScala.collect {
+        StreamRunResult(acc, obsAcc.asScala.collect {
           case ((id, f), v) if id == qid => f -> v
-        }.toMap
-        var prev = snapshot()
-        var stable = 0
-        var waitedMs = 0
-        while (stable < 2 && waitedMs < 5000) {
-          Thread.sleep(50); waitedMs += 50
-          val cur = snapshot()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-        StreamRunResult(acc, prev)
+        }.toMap)
       } finally spark.streams.removeListener(listener)
     }
-  }
-
-  /** Counter fields and breakdown maps add across micro-batches;
-    * retry maxima take the max. Timing-derived fields stay zero (they
-    * are normalized out of equivalence checks). */
-  private[graft] def merge(a: EtlReport, b: EtlReport,
-      wr: Sinks.WriteResult): EtlReport = {
-    def addM(x: Map[String, Long], y: Map[String, Long]) =
-      (x.keySet ++ y.keySet).map(k =>
-        k -> (x.getOrElse(k, 0L) + y.getOrElse(k, 0L))).toMap
-    a.copy(
-      totalLines = a.totalLines + b.totalLines,
-      jsonFailed = a.jsonFailed + b.jsonFailed,
-      jsonParsed = a.jsonParsed + b.jsonParsed,
-      normalizedOk = a.normalizedOk + b.normalizedOk,
-      normalizedFailed = a.normalizedFailed + b.normalizedFailed,
-      writtenOk = a.writtenOk + wr.writtenOk,
-      writeFailed = a.writeFailed + wr.writeFailed,
-      byLevel = addM(a.byLevel, b.byLevel),
-      byService = addM(a.byService, b.byService),
-      filteredLevel = a.filteredLevel + b.filteredLevel,
-      filteredService = a.filteredService + b.filteredService,
-      filteredOther = a.filteredOther + b.filteredOther,
-      dlqWritten = a.dlqWritten + wr.dlqWritten,
-      dlqReasons = addM(a.dlqReasons, wr.dlqReasons),
-      retryStats = RetryStats(
-        a.retryStats.totalRetries + wr.retry.totalRetries,
-        a.retryStats.writesWithRetries + wr.retry.writesWithRetries,
-        math.max(a.retryStats.maxRetriesPerWrite, wr.retry.maxRetriesPerWrite)))
   }
 
   /** A1–A5 as streaming-native `observe()` metrics: per-micro-batch

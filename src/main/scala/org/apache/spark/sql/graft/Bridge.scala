@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *
   * Spark 4 made `ExpressionUtils` private[sql]; custom-Expression
   * libraries conventionally expose it via a shim in the sql package
-  * tree. Used by graft.etl.expressions call sites only.
+  * tree. The other private Spark accessors graft needs live here
+  * too.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -28,6 +29,14 @@ object Bridge {
     org.apache.spark.util.ShutdownHookManager.addShutdownHook(priority)(f)
   def removeShutdownHook(handle: AnyRef): Boolean =
     org.apache.spark.util.ShutdownHookManager.removeShutdownHook(handle)
+
+  /** Block until every event posted to the listener bus so far has
+    * reached every listener (`LiveListenerBus` is private[spark]).
+    * Delivery is asynchronous, so a listener's counters read right
+    * after an action or a streaming query's termination may otherwise
+    * miss its last events. Throws if the bus does not drain in time. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Unpersist the storage blocks behind a `localCheckpoint()`ed
     * Dataset (the `LogicalRDD` leaf's RDD — private[sql], hence here).

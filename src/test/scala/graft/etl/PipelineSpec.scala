@@ -252,10 +252,12 @@ class PipelineSpec extends SparkSpec {
     // design). Runtime-dependent fields (duration, throughput, stage
     // timings) are fixed to exactly-representable values so the bytes
     // are stable.
+    val dir = java.nio.file.Files.createTempDirectory("etl-golden")
     val cfg = EtlConfig.default.copy(
       inputPath = fixturePath,
       outputType = "file",
-      outputPath = s"${java.nio.file.Files.createTempDirectory("etl-golden")}/out.jsonl",
+      outputPath = s"$dir/out.jsonl",
+      reportPath = s"$dir/report.json",
       filterLevels = Seq("WARN", "ERROR"),
       redactKeys = Seq("user_email", "token"))
     val r0 = Pipeline.runFile(spark, cfg).toOption.get.report

@@ -104,9 +104,9 @@ class SinksSpec extends SparkSpec {
 
       val dead = new Sinks.HttpSink(s"http://localhost:$port/dead", policy).write(df)
       assert(dead.writtenOk == 0 && dead.writeFailed == 1)
-      assert(dead.dlq.size == 1)
+      assert(dead.dlqSample.size == 1)
       // reasons carry the ACTUAL error (err.Error() parity) ...
-      assert(dead.dlq.head._2 == "unexpected status 500")
+      assert(dead.dlqSample.head._2 == "unexpected status 500")
       // ... and with NO dlq configured nothing was "written" anywhere
       // (the reference only counts dlq_written with a live dlqWriter)
       assert(dead.dlqWritten == 0 && dead.dlqReasons.isEmpty)
@@ -137,9 +137,8 @@ class SinksSpec extends SparkSpec {
       assert(res.writtenOk == 0 && res.writeFailed == n)
       assert(res.dlqWritten == n)
       assert(res.dlqReasons == Map("unexpected status 500" -> n.toLong))
-      assert(res.dlq.size == Sinks.HttpSink.DlqSampleCap,
-        s"driver sample must be capped, got ${res.dlq.size}")
-      assert(res.dlqHandled.nonEmpty, "sink must own the DLQ write")
+      assert(res.dlqSample.size == Sinks.HttpSink.DlqSampleCap,
+        s"driver sample must be capped, got ${res.dlqSample.size}")
       val lines = java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get(dlq))
       assert(lines.size == n, s"distributed DLQ must hold all $n failures")
@@ -154,13 +153,32 @@ class SinksSpec extends SparkSpec {
   }
 
   test("DLQ file: {record, reason} JSONL appended (openDLQ semantics)") {
-    val dir = java.nio.file.Files.createTempDirectory("dlq")
-    val path = s"$dir/sub/dlq.jsonl" // parent dirs created
-    Sinks.writeDlq(path, Seq(("""{"TS":"t"}""", "write failed after 3 retries")))
-    Sinks.writeDlq(path, Seq(("""{"TS":"u"}""", "boom")))
-    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
-    assert(lines.size == 2)
-    assert(lines.get(0) == """{"record":{"TS":"t"},"reason":"write failed after 3 retries"}""")
+    // the HTTP sink is the pipeline's only DLQ writer: two failing writes
+    // with different reasons land in one nested file, one line each
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/e500", (ex: HttpExchange) => {
+      ex.sendResponseHeaders(500, -1); ex.close()
+    })
+    server.createContext("/e503", (ex: HttpExchange) => {
+      ex.sendResponseHeaders(503, -1); ex.close()
+    })
+    server.start()
+    val port = server.getAddress.getPort
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("dlq")
+      val path = s"$dir/sub/dlq.jsonl" // parent dirs created
+      val policy = new Sinks.RetryPolicy(0, 1, 2, 0)
+      val first = new Sinks.HttpSink(s"http://localhost:$port/e500", policy,
+        dlqPath = path).write(normalized(recordLine))
+      new Sinks.HttpSink(s"http://localhost:$port/e503", policy,
+        dlqPath = path).write(normalized(recordLine))
+      val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
+      assert(lines.size == 2)
+      val (record, reason) = first.dlqSample.head
+      assert(reason == "unexpected status 500")
+      assert(lines.get(0) == s"""{"record":$record,"reason":"unexpected status 500"}""")
+      assert(lines.get(1) == s"""{"record":$record,"reason":"unexpected status 503"}""")
+    } finally server.stop(0)
   }
 
   test("sink builder: dispatch + kafka gated on connector + unknown type") {
@@ -244,13 +262,16 @@ class SinksSpec extends SparkSpec {
   test("fresh pipeline run truncates the DLQ (os.Create parity); resume keeps it") {
     val dir = java.nio.file.Files.createTempDirectory("dlqfresh")
     val path = s"$dir/dlq.jsonl"
-    Sinks.writeDlq(path, Seq(("""{"TS":"stale"}""", "old failure")))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      """{"record":{"TS":"stale"},"reason":"old failure"}""" + "\n")
     assert(java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(path)).size == 1)
     Sinks.initDlq(path) // what a fresh run does before writing
     assert(java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(path)).isEmpty, "fresh run must truncate")
-    Sinks.writeDlq(path, Seq(("""{"TS":"new"}""", "boom")))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      """{"record":{"TS":"new"},"reason":"boom"}""" + "\n",
+      java.nio.file.StandardOpenOption.APPEND)
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
     assert(lines.size == 1 && lines.get(0).contains("new"))
   }

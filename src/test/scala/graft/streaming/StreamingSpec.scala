@@ -1612,6 +1612,104 @@ class StreamingSpec extends SparkSpec {
     assert(sortedLines(s"$out/stream.jsonl") == sortedLines(s"$out/batch.jsonl"))
   }
 
+  /** Drains two one-file micro-batches with `drain`, deletes the last
+    * commits/<n> entry — the state a crash leaves between the sink
+    * write and the checkpoint commit, so the restarted query re-runs
+    * batch n — drains again, and asserts that the output holds every
+    * record exactly once. */
+  private def drainReplayed(tag: String)(
+      drain: (String, EtlConfig, String) => Unit): Unit = {
+    val in = tmpDir(s"$tag-in")
+    Seq("a", "b").zipWithIndex.foreach { case (f, i) =>
+      val p = java.nio.file.Paths.get(s"$in/$f.jsonl")
+      java.nio.file.Files.write(p, (1 to 2).map(j =>
+        s"""{"ts":"2024-01-01T00:0$i:0${j}Z","level":"ERROR","msg":"$f$j"}""")
+        .mkString("\n").getBytes)
+      java.nio.file.Files.setLastModifiedTime(p,
+        java.nio.file.attribute.FileTime.fromMillis(1704067200000L + i * 1000L))
+    }
+    val out = s"${tmpDir(s"$tag-out")}/out.jsonl"
+    val ckpt = tmpDir(s"$tag-ckpt")
+    val cfg = EtlConfig.default.copy(
+      outputType = "file", outputPath = out, filterLevels = Nil)
+    drain(in, cfg, ckpt)
+    val commits = new java.io.File(s"$ckpt/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(last == 1, s"expected two micro-batches, last commit $last")
+    new java.io.File(commits, s"$last").delete()
+    new java.io.File(commits, s".$last.crc").delete()
+    drain(in, cfg, ckpt)
+    import scala.jdk.CollectionConverters._
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(out)).asScala.toSeq
+    assert(lines.size == 4 && lines.distinct.size == 4,
+      s"replayed batch was written again: $lines")
+  }
+
+  test("replay guard (runOnce): a batch re-run after a crash before its commit is not written or counted twice") {
+    val reports = scala.collection.mutable.Buffer[graft.etl.EtlReport]()
+    drainReplayed("replay-once") { (in, cfg, ckpt) =>
+      reports += StreamingPipeline.runOnce(spark, in, cfg, ckpt,
+        maxFilesPerTrigger = 1).fold(e => fail(e), identity).report
+    }
+    assert(reports(0).totalLines == 4 && reports(0).writtenOk == 4)
+    // the second run re-ran only the replayed batch, so it counts nothing
+    assert(reports(1).totalLines == 0 && reports(1).writtenOk == 0,
+      s"replayed batch counted again: ${reports(1)}")
+  }
+
+  test("replay guard (writeStream): a batch re-run after a crash before its commit is not written twice") {
+    drainReplayed("replay-stream") { (in, cfg, ckpt) =>
+      val q = StreamingPipeline.writeStream(
+        StreamingPipeline.transformedStream(
+          StreamingPipeline.readLines(spark, in, maxFilesPerTrigger = 1), cfg),
+        cfg, checkpoint = ckpt, triggerMs = 100).fold(e => fail(e), identity)
+      try q.processAllAvailable() finally q.stop()
+    }
+  }
+
+  test("driver DLQ: an HTTP outage lands in the DLQ exactly once through run and runOnce") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/dead", (ex: HttpExchange) => {
+      ex.sendResponseHeaders(500, -1); ex.close()
+    })
+    server.start()
+    try {
+      val in = tmpDir("dlq-drv-in")
+      val all = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(fixturePath))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/a.jsonl"),
+        String.join("\n", all.subList(0, 3)).getBytes)
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/b.jsonl"),
+        String.join("\n", all.subList(3, all.size)).getBytes)
+      val out = tmpDir("dlq-drv-out")
+      val cfg = EtlConfig.default.copy(
+        outputType = "http",
+        outputPath = s"http://localhost:${server.getAddress.getPort}/dead",
+        sinkMaxRetries = 0,
+        filterLevels = Seq("WARN", "ERROR"),
+        redactKeys = Seq("user_email", "token"))
+      def check(r: graft.etl.EtlReport, dlq: String): Unit = {
+        val n = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(dlq)).size.toLong
+        assert(r.writtenOk == 0 && r.writeFailed == 3, r)
+        assert(n == r.writeFailed, s"DLQ holds $n lines, $r")
+        assert(r.dlqWritten == r.writeFailed)
+        assert(r.dlqReasons == Map("unexpected status 500" -> r.writeFailed))
+      }
+      val batchDlq = s"$out/batch-dlq.jsonl"
+      check(graft.etl.Pipeline.run(
+        graft.etl.Normalize.parseLines(spark, s"$in/*.jsonl"),
+        cfg.copy(dlqPath = batchDlq)).fold(e => fail(e), identity).report,
+        batchDlq)
+      val streamDlq = s"$out/stream-dlq.jsonl"
+      check(StreamingPipeline.runOnce(spark, in, cfg.copy(dlqPath = streamDlq),
+        checkpoint = tmpDir("dlq-drv-ckpt")).fold(e => fail(e), identity).report,
+        streamDlq)
+    } finally server.stop(0)
+  }
+
   test("stateful error-burst detection emits at threshold") {
     import spark.implicits._
     val in = tmpDir("stream-burst")
